@@ -27,17 +27,14 @@ each a separate rule):
 Function words (``which``/``is``/``by``) are excluded as subjects/objects —
 the appositive tail "which <phrase> obj" would otherwise also match the
 active form with subj="which" (the stop-filter is the cross-form
-disambiguation rule, applied identically in every implementation).
+disambiguation rule, applied identically here and in the pure-Python
+``reference_extractor`` the tests compare against).
 
-Two interchangeable implementations, asserted equal in tests:
-
-- ``extract_triples``   — pure Catalyst: per-form ``regexp_extract_all``
-  capture groups zipped positionally and exploded once. The whole extractor
-  lives inside whole-stage codegen; at 10^12 turns this is the scale path
-  (regex runs JVM-side, zero Python serde).
-- ``extract_triples_arrow`` — Arrow-batched ``mapInPandas`` running the
-  pure-Python reference rules per batch (the north star's "vectorized
-  pandas/Arrow UDF extraction"); useful when rules outgrow regex.
+One implementation, pure Catalyst: per-form ``regexp_extract_all`` capture
+groups zipped positionally and exploded once. The whole extractor lives
+inside whole-stage codegen; at 10^12 turns this is the scale path (regex
+runs JVM-side, zero Python serde). Precision/recall against
+``reference_extractor`` is pinned at 1.0 in tests.
 
 Duplicates within a turn (including duplicates manufactured by segment
 overlap) are removed exactly like the reference's ``_deduplicate_edges``
@@ -47,9 +44,7 @@ overlap) are removed exactly like the reference's ``_deduplicate_edges``
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -226,43 +221,6 @@ def extract_triples(segments: DataFrame) -> DataFrame:
         )
     )
     return exploded.distinct()
-
-
-_ARROW_GRAMMAR = [
-    (re.compile(rx), swap, mapping) for rx, swap, mapping, _ in GRAMMAR
-]
-
-TRIPLE_SCHEMA = "conv_id string, turn_idx int, subj string, pred string, obj string"
-
-
-def extract_triples_arrow(segments: DataFrame) -> DataFrame:
-    """Arrow-batched variant: mapInPandas over (conv_id, turn_idx, seg_text)
-    batches; Python regex per batch, then the same distinct."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[tuple] = []
-            for conv_id, turn_idx, text in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["seg_text"]
-            ):
-                for pattern, swap, mapping in _ARROW_GRAMMAR:
-                    for m in pattern.finditer(text or ""):
-                        pred = mapping[re.sub(r"\s+", " ", m.group(2))]
-                        objs = [m.group(3)]
-                        if pattern.groups >= 4:  # conjunction second object
-                            objs.append(m.group(4))
-                        for o in objs:
-                            subj, obj = (o, m.group(1)) if swap else (m.group(1), o)
-                            if subj in STOP_IDENTS or obj in STOP_IDENTS:
-                                continue
-                            rows.append((conv_id, int(turn_idx), subj, pred, obj))
-            yield pd.DataFrame(rows, columns=["conv_id", "turn_idx", "subj", "pred", "obj"])
-
-    return (
-        segments.select("conv_id", "turn_idx", "seg_text")
-        .mapInPandas(run, schema=TRIPLE_SCHEMA)
-        .distinct()
-    )
 
 
 # "X <phrase> Y as Z" — Z is a local alias for Y (the reference's aliased

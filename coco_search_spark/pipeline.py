@@ -16,6 +16,7 @@ incremental, linking + canonicalization re-run globally
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -24,8 +25,6 @@ from pyspark.sql import functions as F
 from coco_search_spark.operators.canonicalize import canonicalize_surfaces
 from coco_search_spark.operators.extract import (
     extract_all,
-    extract_standalone_mentions,
-    extract_triples_arrow,
     split_extracted,
 )
 from coco_search_spark.operators.linking import link_surfaces
@@ -47,6 +46,19 @@ BROADCAST_SURFACE_LIMIT = 5_000_000
 # → ≤ ~10 MB driver-side). Above it the fetch keeps the semi-join form
 # (reads the edge parts in full — correct, just not row-group-pruned).
 EDGE_FETCH_PUSHDOWN_LIMIT = 100_000
+
+
+@contextmanager
+def _job_description(spark: SparkSession, label: str):
+    """Label the Spark jobs this thread starts inside the block. The label
+    is cleared in ``finally``: background thunks run on pooled threads, and
+    a job that raises must not leave its label on the next thunk's jobs."""
+    sc = spark.sparkContext
+    sc.setJobDescription(label)
+    try:
+        yield
+    finally:
+        sc.setJobDescription(None)
 
 
 def _parts_ok(parts: list[dict] | None) -> bool:
@@ -103,7 +115,6 @@ def run_pipeline(
     catalog: DataFrame | None = None,
     out_dir: str | None = None,
     state_dir: str | None = None,
-    extractor: str = "native",
     embed_dim: int = 64,
     config: "EngineConfig | None" = None,
     upsert_only: bool = False,
@@ -173,9 +184,6 @@ def run_pipeline(
         now = _time.perf_counter()
         timings["f_" + name] = round(now - _tf[0], 3)
         _tf[0] = now
-
-    if extractor not in ("native", "arrow"):
-        raise ValueError(f"unknown extractor {extractor!r}")
 
     raw_transcripts = transcripts
     if branch is not None and not state_dir:
@@ -371,12 +379,7 @@ def run_pipeline(
             facts_parts = store.table_parts("facts")
             chunks_parts = store.table_parts("chunks")
             chunks_reloadable = out_dir is None or _parts_ok(chunks_parts)
-            if (
-                extractor == "native"
-                and config_compatible
-                and chunks_reloadable
-                and _parts_ok(facts_parts)
-            ):
+            if config_compatible and chunks_reloadable and _parts_ok(facts_parts):
                 # restore EVERY fact family of unchanged conversations —
                 # triples alone would silently drop their standalone
                 # mentions (degree-0 nodes) and alias bindings (cluster
@@ -422,8 +425,7 @@ def run_pipeline(
     # gate exactly, so the future exists iff the gate will consume it.
     old_rep_future = None
     if (
-        extractor == "native"
-        and store is not None
+        store is not None
         and out_dir
         and prev_facts is not None
         and isinstance(prev_kind_totals, dict)
@@ -432,37 +434,34 @@ def run_pipeline(
     ):
 
         def _fetch_old_rep():
-            spark.sparkContext.setJobDescription("prefetch: replaced facts")
-            replaced = diff.filter(
-                F.col("status").isin("changed", "deleted")
-            ).select("conv_id")
-            rep_sample = replaced.take(EDGE_FETCH_PUSHDOWN_LIMIT + 1)
-            if len(rep_sample) <= EDGE_FETCH_PUSHDOWN_LIMIT:
-                old = store.read_table(
-                    spark, "facts", conv_ids=[r["conv_id"] for r in rep_sample]
-                )
-            else:
-                old = store.read_table(spark, "facts").join(
-                    replaced, "conv_id", "left_semi"
-                )
-            # delta-sized; consumed by the fused contrib delta AND the
-            # signed kind-count aggregation
-            out = old.localCheckpoint(eager=True)
-            spark.sparkContext.setJobDescription(None)
-            return out
+            with _job_description(spark, "prefetch: replaced facts"):
+                replaced = diff.filter(
+                    F.col("status").isin("changed", "deleted")
+                ).select("conv_id")
+                rep_sample = replaced.take(EDGE_FETCH_PUSHDOWN_LIMIT + 1)
+                if len(rep_sample) <= EDGE_FETCH_PUSHDOWN_LIMIT:
+                    old = store.read_table(
+                        spark, "facts", conv_ids=[r["conv_id"] for r in rep_sample]
+                    )
+                else:
+                    old = store.read_table(spark, "facts").join(
+                        replaced, "conv_id", "left_semi"
+                    )
+                # delta-sized; consumed by the fused contrib delta AND the
+                # signed kind-count aggregation
+                return old.localCheckpoint(eager=True)
 
         old_rep_future = bg_pool.submit(_fetch_old_rep)
 
-    # native path carries char offsets for edge provenance; the Arrow path
-    # (grammar-in-Python escape hatch) skips them.
-    # segments feed BOTH the extraction and the chunk projection. On DELTA
-    # runs the table is delta-sized and one materialization saves the
-    # second segmentation pass outright. On FULL runs it must stay lazy:
+    # segments (with char offsets for edge provenance) feed BOTH the
+    # extraction and the chunk projection. On DELTA runs the table is
+    # delta-sized and one materialization saves the second segmentation
+    # pass outright. On FULL runs it must stay lazy:
     # storing the exploded corpus-sized segment table costs more than the
     # two consumers' recompute (interleaved A/B at bench scale: eager
     # checkpoint ~2341 normalized unit-sec vs lazy ~1611 — the explode is
     # codegen-cheap, the materialized rows are wide).
-    segments = segment_turns(dirty, with_offsets=(extractor == "native"))
+    segments = segment_turns(dirty, with_offsets=True)
     if prev_facts is not None:
         segments = segments.localCheckpoint(eager=True)
     _stamp("segment")
@@ -545,26 +544,18 @@ def run_pipeline(
             chunks_path_bg = f"{out_dir}/chunks_v{version:06d}"
 
             def _write_chunks_bg(df=chunks, path=chunks_path_bg):
-                spark.sparkContext.setJobDescription("chunks: tokenize+embed+write")
-                df.write.mode("overwrite").parquet(path)
-                spark.sparkContext.setJobDescription(None)
+                with _job_description(spark, "chunks: tokenize+embed+write"):
+                    df.write.mode("overwrite").parquet(path)
 
             chunks_future = bg_pool.submit(_write_chunks_bg)
-        if (
-            out_dir
-            and dirty_facts is not None
-            and combined is not None
-            and not noop
-            and not will_compact
-        ):
+        if out_dir and not noop and not will_compact:
             # the delta IS the extraction checkpoint; on a full run
             # combined == dirty_facts, so one sink body covers both
             facts_path_bg = f"{out_dir}/facts_v{version:06d}"
 
             def _write_facts_bg(df=dirty_facts, path=facts_path_bg):
-                spark.sparkContext.setJobDescription("facts sink")
-                df.write.mode("overwrite").parquet(path)
-                spark.sparkContext.setJobDescription(None)
+                with _job_description(spark, "facts sink"):
+                    df.write.mode("overwrite").parquet(path)
 
             facts_future = bg_pool.submit(_write_facts_bg)
 
@@ -577,28 +568,29 @@ def run_pipeline(
     def _quarantine_sink():
         q = quarantined.withColumn("src_file", F.input_file_name())
         if out_dir:
-            spark.sparkContext.setJobDescription("quarantine sink")
-            q_path = f"{out_dir}/quarantine"
-            if prune is not None and os.path.exists(q_path):
-                prev_q = spark.read.parquet(q_path)
-                if "src_file" in prev_q.columns:
-                    # drop re-scanned files' rows (re-detected this run)
-                    # and removed files' rows (no longer in the corpus);
-                    # both exclusion lists are delta-sized
-                    gone = list(prune.scanned_files) + list(prune.removed_files)
-                    q = q.unionByName(
-                        prev_q.filter(~F.col("src_file").isin(gone)),
-                        allowMissingColumns=True,
-                    )
-                # pre-upgrade quarantine without src_file: rows cannot be
-                # attributed to files — re-detected on their next re-scan
-            # materialize BEFORE the overwrite of the dir the carry-forward
-            # may still be lazily reading; always overwrite (even when
-            # empty): a rerun after the data was fixed must not leave the
-            # previous run's rows contradicting n_quarantined_turns=0
-            q = q.localCheckpoint(eager=True)
-            q.write.mode("overwrite").parquet(q_path)
-            spark.sparkContext.setJobDescription(None)
+            with _job_description(spark, "quarantine sink"):
+                q_path = f"{out_dir}/quarantine"
+                if prune is not None and os.path.exists(q_path):
+                    prev_q = spark.read.parquet(q_path)
+                    if "src_file" in prev_q.columns:
+                        # drop re-scanned files' rows (re-detected this
+                        # run) and removed files' rows (no longer in the
+                        # corpus); both exclusion lists are delta-sized
+                        gone = list(prune.scanned_files) + list(prune.removed_files)
+                        q = q.unionByName(
+                            prev_q.filter(~F.col("src_file").isin(gone)),
+                            allowMissingColumns=True,
+                        )
+                    # pre-upgrade quarantine without src_file: rows cannot
+                    # be attributed to files — re-detected on their next
+                    # re-scan
+                # materialize BEFORE the overwrite of the dir the
+                # carry-forward may still be lazily reading; always
+                # overwrite (even when empty): a rerun after the data was
+                # fixed must not leave the previous run's rows
+                # contradicting n_quarantined_turns=0
+                q = q.localCheckpoint(eager=True)
+                q.write.mode("overwrite").parquet(q_path)
             # hand the checkpoint to the state-row builder: its per-conv
             # error counts would otherwise re-scan the corpus (cold runs
             # paid a second full pass inside the commit). Carried prev
@@ -614,123 +606,109 @@ def run_pipeline(
     # ONE corpus scan + ONE shuffle extracts every fact family (triples
     # with provenance, standalone mentions, alias bindings) — at 10^12
     # turns the scan dominates, so the pipeline must not pay it per family.
-    # The Arrow escape hatch (grammar-in-Python) keeps the per-family scans.
-    combined: DataFrame | None = None
-    dirty_facts: DataFrame | None = None
     vocab: DataFrame | None = None  # refcounted vocabulary (vocab_state)
-    vocab_mode = None  # None (storeless/arrow) | "full" | "delta"
+    vocab_mode = None  # None (storeless) | "full" | "delta"
     kind_counts: dict | None = None
-    lean_facts = False
-    if extractor == "native":
-        # this run's extraction output alone — the FULL corpus facts on a
-        # cold/full run, the dirty conversations' facts on a delta run
-        # (segments are scoped to the dirty set there). One
-        # materialization: localCheckpoint stores the deduped fact rows
-        # once; family splits below are cheap filters over it.
-        dirty_facts = extract_all(segments).localCheckpoint(eager=True)
-        _fine("extract_ckpt")
-        # ---- refcounted vocabulary maintenance (round 5 late) ----------
-        # The surface/binding/standalone sets are per-conversation-distinct
-        # unions over the facts, so a warm run maintains their refcounts
-        # from the delta (vocab_state.py) instead of re-scanning the
-        # corpus union — the same delta rule node degrees already use.
-        # Replaced conversations' previous facts come from the indexed
-        # facts fetch (bounded collect → pushed isin, semi-join above the
-        # cap). Any gate miss → full recompute below.
-        if store is not None and out_dir:
-            from coco_search_spark.operators.vocab_state import (
-                apply_vocab_signed,
-                vocab_contrib_delta,
-            )
-
-            vocab_mode = "full"
-            if (
-                prev_facts is not None
-                and isinstance(prev_kind_totals, dict)
-                and snap.get("vocab_path")
-                and os.path.exists(snap["vocab_path"])
-            ):
-                old_vocab = spark.read.parquet(snap["vocab_path"])
-                # fetched+checkpointed by the background prefetch that ran
-                # during the segment/extract stages (the guard up there
-                # mirrors this gate exactly)
-                old_rep = old_rep_future.result()
-                _fine("old_rep_fetch")
-                # fused signed delta (vocab_contrib_delta): 2 shuffles
-                # instead of the add/sub pair's 5 — warm-floor job count
-                cand = apply_vocab_signed(
-                    old_vocab, vocab_contrib_delta(dirty_facts, old_rep)
-                ).localCheckpoint(eager=True)
-                # loud invariant: a negative refcount means the subtracted
-                # facts were not what the snapshot held — recompute from
-                # the corpus rather than persist a corrupt vocabulary
-                _fine("vocab_delta_ckpt")
-                if cand.filter(F.col("cnt") < 0).limit(1).count() > 0:
-                    cand.unpersist()
-                else:
-                    vocab = cand.filter(F.col("cnt") > 0)
-                    vocab_mode = "delta"
-                    # per-kind fact totals by the same delta arithmetic —
-                    # ONE signed aggregation instead of a corpus groupBy
-                    net = {
-                        r["kind"]: r["net"]
-                        for r in dirty_facts.select(
-                            "kind", F.lit(1).alias("sgn")
-                        )
-                        .unionAll(old_rep.select("kind", F.lit(-1).alias("sgn")))
-                        .groupBy("kind")
-                        .agg(F.sum("sgn").alias("net"))
-                        .collect()
-                    }
-                    _fine("kind_net")
-                    kind_counts = {
-                        k: int(prev_kind_totals.get(k, 0)) + int(net.get(k, 0))
-                        for k in set(prev_kind_totals) | set(net)
-                    }
-        # lean mode: with a delta-maintained vocabulary nothing downstream
-        # needs a materialized corpus-wide fact union — surfaces, binding
-        # pairs, standalone mentions and kind totals all derive from the
-        # vocab table, the facts sink writes the dirty checkpoint, and the
-        # dirty-edge resolve pre-filters from it. Compaction runs fold old
-        # parts into a full one, so they keep the materialized union.
-        lean_facts = (
-            vocab is not None
-            and prev_facts is not None
-            and not (
-                n_dirty > 0 and len(facts_parts) + 1 > cfg.compact_parts_after
-            )
+    # this run's extraction output alone — the FULL corpus facts on a
+    # cold/full run, the dirty conversations' facts on a delta run
+    # (segments are scoped to the dirty set there). One
+    # materialization: localCheckpoint stores the deduped fact rows
+    # once; family splits below are cheap filters over it.
+    dirty_facts = extract_all(segments).localCheckpoint(eager=True)
+    _fine("extract_ckpt")
+    # ---- refcounted vocabulary maintenance (round 5 late) ----------
+    # The surface/binding/standalone sets are per-conversation-distinct
+    # unions over the facts, so a warm run maintains their refcounts
+    # from the delta (vocab_state.py) instead of re-scanning the
+    # corpus union — the same delta rule node degrees already use.
+    # Replaced conversations' previous facts come from the indexed
+    # facts fetch (bounded collect → pushed isin, semi-join above the
+    # cap). Any gate miss → full recompute below.
+    if store is not None and out_dir:
+        from coco_search_spark.operators.vocab_state import (
+            apply_vocab_signed,
+            vocab_contrib_delta,
         )
-        if prev_facts is not None:
-            # allowMissingColumns: snapshots written before newer fact
-            # columns existed reload with NULLs instead of failing (the
-            # schema-evolution rule — see state.ensure_columns)
-            combined = dirty_facts.unionByName(prev_facts, allowMissingColumns=True)
-            if not lean_facts:
-                combined = combined.localCheckpoint(eager=True)
-        else:
-            combined = dirty_facts
-        triples, standalone, bindings = split_extracted(combined)
-        if kind_counts is None:
-            # ONE aggregation for both family counts (two filtered counts
-            # pay two scheduler round-trips over the same table; warm-run
-            # latency is job-count-bound)
-            kind_counts = {
-                r["kind"]: r["n"]
-                for r in combined.groupBy("kind")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-        n_triples = kind_counts.get("triple", 0)
-        n_standalone = kind_counts.get("mention", 0)
+
+        vocab_mode = "full"
+        if (
+            prev_facts is not None
+            and isinstance(prev_kind_totals, dict)
+            and snap.get("vocab_path")
+            and os.path.exists(snap["vocab_path"])
+        ):
+            old_vocab = spark.read.parquet(snap["vocab_path"])
+            # fetched+checkpointed by the background prefetch that ran
+            # during the segment/extract stages (the guard up there
+            # mirrors this gate exactly)
+            old_rep = old_rep_future.result()
+            _fine("old_rep_fetch")
+            # fused signed delta (vocab_contrib_delta): 2 shuffles
+            # instead of the add/sub pair's 5 — warm-floor job count
+            cand = apply_vocab_signed(
+                old_vocab, vocab_contrib_delta(dirty_facts, old_rep)
+            ).localCheckpoint(eager=True)
+            # loud invariant: a negative refcount means the subtracted
+            # facts were not what the snapshot held — recompute from
+            # the corpus rather than persist a corrupt vocabulary
+            _fine("vocab_delta_ckpt")
+            if cand.filter(F.col("cnt") < 0).limit(1).count() > 0:
+                cand.unpersist()
+            else:
+                vocab = cand.filter(F.col("cnt") > 0)
+                vocab_mode = "delta"
+                # per-kind fact totals by the same delta arithmetic —
+                # ONE signed aggregation instead of a corpus groupBy
+                net = {
+                    r["kind"]: r["net"]
+                    for r in dirty_facts.select(
+                        "kind", F.lit(1).alias("sgn")
+                    )
+                    .unionAll(old_rep.select("kind", F.lit(-1).alias("sgn")))
+                    .groupBy("kind")
+                    .agg(F.sum("sgn").alias("net"))
+                    .collect()
+                }
+                _fine("kind_net")
+                kind_counts = {
+                    k: int(prev_kind_totals.get(k, 0)) + int(net.get(k, 0))
+                    for k in set(prev_kind_totals) | set(net)
+                }
+    # lean mode: with a delta-maintained vocabulary nothing downstream
+    # needs a materialized corpus-wide fact union — surfaces, binding
+    # pairs, standalone mentions and kind totals all derive from the
+    # vocab table, the facts sink writes the dirty checkpoint, and the
+    # dirty-edge resolve pre-filters from it. Compaction runs fold old
+    # parts into a full one, so they keep the materialized union.
+    lean_facts = (
+        vocab is not None
+        and prev_facts is not None
+        and not (
+            n_dirty > 0 and len(facts_parts) + 1 > cfg.compact_parts_after
+        )
+    )
+    if prev_facts is not None:
+        # allowMissingColumns: snapshots written before newer fact
+        # columns existed reload with NULLs instead of failing (the
+        # schema-evolution rule — see state.ensure_columns)
+        combined = dirty_facts.unionByName(prev_facts, allowMissingColumns=True)
+        if not lean_facts:
+            combined = combined.localCheckpoint(eager=True)
     else:
-        # Arrow escape hatch: per-family scans, no facts snapshot — an
-        # incremental resume under this extractor falls back to full
-        # re-extract (facts_path is never written)
-        triples = extract_triples_arrow(segments).cache()
-        standalone = extract_standalone_mentions(segments).cache()
-        bindings = None
-        n_triples = triples.count()
-        n_standalone = standalone.count()
+        combined = dirty_facts
+    triples, standalone, bindings = split_extracted(combined)
+    if kind_counts is None:
+        # ONE aggregation for both family counts (two filtered counts
+        # pay two scheduler round-trips over the same table; warm-run
+        # latency is job-count-bound)
+        kind_counts = {
+            r["kind"]: r["n"]
+            for r in combined.groupBy("kind")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
+        }
+    n_triples = kind_counts.get("triple", 0)
+    n_standalone = kind_counts.get("mention", 0)
     _stamp("extract")
     # extraction (core-saturating) is done — NOW hand the idle capacity of
     # the vocabulary-sized linking/canonicalize stages to the overlapped
@@ -765,20 +743,18 @@ def run_pipeline(
     ):
 
         def _fetch_prev_edges():
-            spark.sparkContext.setJobDescription("prefetch: replaced edges")
-            spec_ids = diff.filter(F.col("status") != "unchanged").select("conv_id")
-            sample = spec_ids.take(EDGE_FETCH_PUSHDOWN_LIMIT + 1)
-            if len(sample) <= EDGE_FETCH_PUSHDOWN_LIMIT:
-                prev = store.read_table(
-                    spark, "edges", conv_ids=[r["conv_id"] for r in sample]
-                )
-            else:
-                prev = store.read_table(spark, "edges").join(
-                    spec_ids, "conv_id", "left_semi"
-                )
-            out = prev.localCheckpoint(eager=True)
-            spark.sparkContext.setJobDescription(None)
-            return out
+            with _job_description(spark, "prefetch: replaced edges"):
+                spec_ids = diff.filter(F.col("status") != "unchanged").select("conv_id")
+                sample = spec_ids.take(EDGE_FETCH_PUSHDOWN_LIMIT + 1)
+                if len(sample) <= EDGE_FETCH_PUSHDOWN_LIMIT:
+                    prev = store.read_table(
+                        spark, "edges", conv_ids=[r["conv_id"] for r in sample]
+                    )
+                else:
+                    prev = store.read_table(spark, "edges").join(
+                        spec_ids, "conv_id", "left_semi"
+                    )
+                return prev.localCheckpoint(eager=True)
 
         prev_edges_future = bg_pool.submit(_fetch_prev_edges)
 
@@ -789,7 +765,7 @@ def run_pipeline(
 
         surfaces = vocab_surfaces(vocab).localCheckpoint(eager=True)
         _fine("surfaces_ckpt")
-    elif combined is not None:
+    else:
         # vocabulary-sized surface table in ONE pass over the fact
         # checkpoint: every family's surface column (triple subj/obj,
         # standalone mention, both binding sides — an alias bound in text
@@ -814,24 +790,6 @@ def run_pipeline(
             .distinct()
             .localCheckpoint(eager=True)
         )
-    else:
-        # Arrow escape hatch: per-family frames (no combined kind table)
-        surface_parts = [
-            triples.select(F.col("subj").alias("surface")).distinct(),
-            triples.select(F.col("obj").alias("surface")).distinct(),
-            standalone.select(F.col("mention").alias("surface")).distinct(),
-        ]
-        if bindings is not None:
-            surface_parts.append(
-                bindings.select(F.col("target").alias("surface")).distinct()
-            )
-            surface_parts.append(
-                bindings.select(F.col("alias").alias("surface")).distinct()
-            )
-        surfaces = surface_parts[0]
-        for p in surface_parts[1:]:
-            surfaces = surfaces.unionByName(p)
-        surfaces = surfaces.distinct().localCheckpoint(eager=True)
     # counted once (reused in metrics): gates the count-based broadcast
     # hints below — under the budget the vocabulary tables get an explicit
     # broadcast (no AQE conversion overhead); over it (the 10^9-surface
@@ -919,27 +877,26 @@ def run_pipeline(
     # refcounts on delta runs; a corpus-union distinct otherwise. Both
     # the fingerprint and the CC extra edges consume this — duplicates
     # carry no information for either (the label function sees sets).
-    binding_pairs = None
     if vocab is not None and vocab_mode == "delta":
         from coco_search_spark.operators.vocab_state import vocab_binding_pairs
 
         binding_pairs = vocab_binding_pairs(vocab)
-    elif bindings is not None:
+    else:
         binding_pairs = bindings.select("target", "alias").distinct()
     if store is not None:
         from coco_search_spark.operators.link_state import catalog_fingerprint
 
-        tagged = surfaces.select(F.concat(F.lit("s:"), F.col("surface")).alias("k"))
-        if binding_pairs is not None:
-            # distinct AFTER the concat: the fingerprint folds the tagged
-            # STRING set, and two distinct pairs can collide as strings —
-            # both derivation modes must fold the identical row set or the
-            # reuse gate would never match across a mode switch
-            tagged = tagged.unionByName(
-                binding_pairs.select(
-                    F.concat_ws("→", F.lit("b:"), "target", "alias").alias("k")
-                ).distinct()
-            )
+        # distinct AFTER the concat: the fingerprint folds the tagged
+        # STRING set, and two distinct pairs can collide as strings — both
+        # derivation modes must fold the identical row set or the reuse
+        # gate would never match across a mode switch
+        tagged = surfaces.select(
+            F.concat(F.lit("s:"), F.col("surface")).alias("k")
+        ).unionByName(
+            binding_pairs.select(
+                F.concat_ws("→", F.lit("b:"), "target", "alias").alias("k")
+            ).distinct()
+        )
         canon_in_fp = catalog_fingerprint(tagged)
         if (
             snap is not None
@@ -962,14 +919,11 @@ def run_pipeline(
         # binding_pairs is the distinct pair set (vocab-derived on delta
         # runs); connected components see sets, so duplicates carried no
         # information anyway.
-        extra = (
-            binding_pairs.select(F.col("target").alias("a"), F.col("alias").alias("b"))
-            if binding_pairs is not None
-            else None
-        )
         c = canonicalize_surfaces(
             surfaces,
-            extra_edges=extra,
+            extra_edges=binding_pairs.select(
+                F.col("target").alias("a"), F.col("alias").alias("b")
+            ),
             max_cc_iterations=cfg.max_cc_iterations,
             n_hashes=cfg.n_hashes,
             n_bands=cfg.n_bands,
@@ -1220,78 +1174,76 @@ def run_pipeline(
         )
 
         def _nodes_delta_bg():
-            spark.sparkContext.setJobDescription("nodes: degree delta")
-            _bt = _time.perf_counter()
-            if prev_edges_future is not None and n_moved == 0:
-                # the speculative prefetch's id set (every non-unchanged
-                # conversation) EQUALS deleted ∪ edge_dirty_ids here,
-                # because with zero moved surfaces edge_dirty_ids is
-                # exactly the dirty set — consume the checkpoint fetched
-                # during linking
-                prev_edges_replaced = prev_edges_future.result()
-                if _fine_on:
-                    timings["f_prev_edges_read"] = round(_time.perf_counter() - _bt, 3)
-                    _bt = _time.perf_counter()
-            else:
-                replaced_ids = (
-                    diff.filter(F.col("status") == "deleted")
-                    .select("conv_id")
-                    .unionByName(edge_dirty_ids)
-                    .distinct()
-                )
-                # delta-sized id set → pushed `isin` predicate on the part
-                # scans: parquet row groups whose conv_id min/max (kept
-                # tight by write_edges' sortWithinPartitions) miss the set
-                # are skipped without reading — an indexed fetch of the
-                # replaced conversations' previous edges instead of an
-                # O(all-edges) scan. The collect is bounded: above the cap
-                # (driver-memory guard) the plain semi-join path reads the
-                # parts in full (correct, just not pruned).
-                sample = replaced_ids.take(EDGE_FETCH_PUSHDOWN_LIMIT + 1)
-                if len(sample) <= EDGE_FETCH_PUSHDOWN_LIMIT:
-                    prev_edges_replaced = store.read_table(
-                        spark, "edges", conv_ids=[r["conv_id"] for r in sample]
-                    )
-                else:
-                    prev_edges_replaced = store.read_table(spark, "edges").join(
-                        replaced_ids, "conv_id", "left_semi"
-                    )
-                if _fine_on:
-                    timings["f_prev_edges_read"] = round(_time.perf_counter() - _bt, 3)
-                    _bt = _time.perf_counter()
-            # ONE signed aggregation for the degree delta (degree_delta:
-            # contrib(new) − contrib(old) over the signed endpoint union)
-            # instead of two contrib aggs + a full-outer join — the delta
-            # is delta-sized, so the warm floor here is shuffle/job count
-            cand = apply_degree_delta(
-                spark.read.parquet(old_nodes_path),
-                degree_delta(edges_dirty, prev_edges_replaced),
-                standalone_ids,
-                # materialize BEFORE the sink overwrites the old nodes dir
-                # the plan lazily reads (vocabulary-sized) — ordering holds
-                # by construction: the nodes sink thunk consumes THIS
-                # future before it writes the dir
-            ).localCheckpoint(eager=True)
-            if _fine_on:
-                timings["f_node_delta_ckpt"] = round(_time.perf_counter() - _bt, 3)
+            with _job_description(spark, "nodes: degree delta"):
                 _bt = _time.perf_counter()
-            # loud invariant: a negative degree means the subtracted edge
-            # set was not what the snapshot held — rebuild instead of
-            # persisting a corrupt table (cheap check, vocabulary-sized)
-            if (
-                cand.filter((F.col("out_degree") < 0) | (F.col("in_degree") < 0))
-                .limit(1)
-                .count()
-                > 0
-            ):
-                full = build_nodes(edges, extra_entities=standalone_ids).cache()
-                full.count()
-                spark.sparkContext.setJobDescription(None)
-                return full, "full"
-            if _fine_on:
-                timings["f_node_neg_check"] = round(_time.perf_counter() - _bt, 3)
-            spark.sparkContext.setJobDescription(None)
-            return cand, "delta"
+                if prev_edges_future is not None and n_moved == 0:
+                    # the speculative prefetch's id set (every non-unchanged
+                    # conversation) EQUALS deleted ∪ edge_dirty_ids here,
+                    # because with zero moved surfaces edge_dirty_ids is
+                    # exactly the dirty set — consume the checkpoint fetched
+                    # during linking
+                    prev_edges_replaced = prev_edges_future.result()
+                    if _fine_on:
+                        timings["f_prev_edges_read"] = round(_time.perf_counter() - _bt, 3)
+                        _bt = _time.perf_counter()
+                else:
+                    replaced_ids = (
+                        diff.filter(F.col("status") == "deleted")
+                        .select("conv_id")
+                        .unionByName(edge_dirty_ids)
+                        .distinct()
+                    )
+                    # delta-sized id set → pushed `isin` predicate on the part
+                    # scans: parquet row groups whose conv_id min/max (kept
+                    # tight by write_edges' sortWithinPartitions) miss the set
+                    # are skipped without reading — an indexed fetch of the
+                    # replaced conversations' previous edges instead of an
+                    # O(all-edges) scan. The collect is bounded: above the cap
+                    # (collect-size guard) the plain semi-join path reads the
+                    # parts in full (correct, just not pruned).
+                    sample = replaced_ids.take(EDGE_FETCH_PUSHDOWN_LIMIT + 1)
+                    if len(sample) <= EDGE_FETCH_PUSHDOWN_LIMIT:
+                        prev_edges_replaced = store.read_table(
+                            spark, "edges", conv_ids=[r["conv_id"] for r in sample]
+                        )
+                    else:
+                        prev_edges_replaced = store.read_table(spark, "edges").join(
+                            replaced_ids, "conv_id", "left_semi"
+                        )
+                    if _fine_on:
+                        timings["f_prev_edges_read"] = round(_time.perf_counter() - _bt, 3)
+                        _bt = _time.perf_counter()
+                # ONE signed aggregation for the degree delta (degree_delta:
+                # contrib(new) − contrib(old) over the signed endpoint union)
+                # instead of two contrib aggs + a full-outer join — the delta
+                # is delta-sized, so the warm floor here is shuffle/job count
+                cand = apply_degree_delta(
+                    spark.read.parquet(old_nodes_path),
+                    degree_delta(edges_dirty, prev_edges_replaced),
+                    standalone_ids,
+                    # materialize BEFORE the sink overwrites the old nodes dir
+                    # the plan lazily reads (vocabulary-sized) — ordering holds
+                    # by construction: the nodes sink thunk consumes THIS
+                    # future before it writes the dir
+                ).localCheckpoint(eager=True)
+                if _fine_on:
+                    timings["f_node_delta_ckpt"] = round(_time.perf_counter() - _bt, 3)
+                    _bt = _time.perf_counter()
+                # loud invariant: a negative degree means the subtracted edge
+                # set was not what the snapshot held — rebuild instead of
+                # persisting a corrupt table (cheap check, vocabulary-sized)
+                if (
+                    cand.filter((F.col("out_degree") < 0) | (F.col("in_degree") < 0))
+                    .limit(1)
+                    .count()
+                    > 0
+                ):
+                    full = build_nodes(edges, extra_entities=standalone_ids).cache()
+                    full.count()
+                    return full, "full"
+                if _fine_on:
+                    timings["f_node_neg_check"] = round(_time.perf_counter() - _bt, 3)
+                return cand, "delta"
 
         nodes_future = bg_pool.submit(_nodes_delta_bg)
     else:
@@ -1303,10 +1255,9 @@ def run_pipeline(
             edges.count()
 
         def _nodes_full_bg():
-            spark.sparkContext.setJobDescription("nodes: full build")
-            n = build_nodes(edges, extra_entities=standalone_ids).cache()
-            n.count()
-            spark.sparkContext.setJobDescription(None)
+            with _job_description(spark, "nodes: full build"):
+                n = build_nodes(edges, extra_entities=standalone_ids).cache()
+                n.count()
             return n, "full"
 
         nodes_future = bg_pool.submit(_nodes_full_bg)
@@ -1518,35 +1469,34 @@ def run_pipeline(
                         ).parquet(p),
                     )
                 )
-            if combined is not None:
-                if (
-                    noop_delta
-                    and n_deleted == 0
-                    and snap is not None
-                    and snap.get("vocab_path")
-                    and isinstance(prev_kind_totals, dict)
-                ):
-                    # identical corpus (no dirty, no deleted): the
-                    # persisted vocabulary is value-identical — carry the
-                    # pointer instead of rewriting the same bytes
-                    vocab_path = snap["vocab_path"]
-                else:
-                    # refcounted vocabulary for next-run delta maintenance:
-                    # vocabulary-sized, full rewrite per run (same policy
-                    # as the link map); seeded from the corpus union on
-                    # full/fallback runs, carried forward arithmetically on
-                    # delta runs
-                    from coco_search_spark.operators.vocab_state import vocab_contrib
+            if (
+                noop_delta
+                and n_deleted == 0
+                and snap is not None
+                and snap.get("vocab_path")
+                and isinstance(prev_kind_totals, dict)
+            ):
+                # identical corpus (no dirty, no deleted): the
+                # persisted vocabulary is value-identical — carry the
+                # pointer instead of rewriting the same bytes
+                vocab_path = snap["vocab_path"]
+            else:
+                # refcounted vocabulary for next-run delta maintenance:
+                # vocabulary-sized, full rewrite per run (same policy
+                # as the link map); seeded from the corpus union on
+                # full/fallback runs, carried forward arithmetically on
+                # delta runs
+                from coco_search_spark.operators.vocab_state import vocab_contrib
 
-                    vocab_path = f"{out_dir}/vocab_v{version:06d}"
-                    sinks.append(
-                        (
-                            "vocab",
-                            lambda p=vocab_path, df=(
-                                vocab if vocab is not None else vocab_contrib(combined)
-                            ): df.write.mode("overwrite").parquet(p),
-                        )
+                vocab_path = f"{out_dir}/vocab_v{version:06d}"
+                sinks.append(
+                    (
+                        "vocab",
+                        lambda p=vocab_path, df=(
+                            vocab if vocab is not None else vocab_contrib(combined)
+                        ): df.write.mode("overwrite").parquet(p),
                     )
+                )
             if n_moved == 0:
                 # the link map is value-identical to the persisted copy —
                 # carry the pointer instead of rewriting the same bytes
@@ -1564,41 +1514,40 @@ def run_pipeline(
                         ).parquet(p),
                     )
                 )
-        if combined is not None:
-            # the COMBINED fact table (triples + standalone mentions +
-            # bindings, kind-tagged) is the resume unit — restoring triples
-            # alone would drop the other families for unchanged convs
-            if noop_delta:
-                facts_parts_new = list(facts_parts)
-                facts_path = facts_parts_new[-1]["path"]
+        # the COMBINED fact table (triples + standalone mentions +
+        # bindings, kind-tagged) is the resume unit — restoring triples
+        # alone would drop the other families for unchanged convs
+        if noop_delta:
+            facts_parts_new = list(facts_parts)
+            facts_path = facts_parts_new[-1]["path"]
+        else:
+            facts_path = f"{out_dir}/facts_v{version:06d}"
+            new_part = {"path": facts_path, "version": version}
+            if delta_mode and not compact:
+                # the delta IS the extraction checkpoint: segments were
+                # scoped to the dirty conversations, so this equals the
+                # old corpus-union semi-join row for row without the
+                # corpus scan
+                facts_parts_new = list(facts_parts) + [new_part]
             else:
-                facts_path = f"{out_dir}/facts_v{version:06d}"
-                new_part = {"path": facts_path, "version": version}
-                if delta_mode and not compact:
-                    # the delta IS the extraction checkpoint: segments were
-                    # scoped to the dirty conversations, so this equals the
-                    # old corpus-union semi-join row for row without the
-                    # corpus scan
-                    facts_parts_new = list(facts_parts) + [new_part]
-                else:
-                    facts_parts_new = [new_part]
-                if facts_future is not None:
-                    # sink ran overlapped since the extraction checkpoint
-                    # (same path/content as the sequential write would use)
-                    sinks.append(("facts", facts_future.result))
-                else:
-                    # compaction fold (or a path the bg launch declined)
-                    facts_out = (
-                        dirty_facts if (delta_mode and not compact) else combined
+                facts_parts_new = [new_part]
+            if facts_future is not None:
+                # sink ran overlapped since the extraction checkpoint
+                # (same path/content as the sequential write would use)
+                sinks.append(("facts", facts_future.result))
+            else:
+                # compaction fold (or a path the bg launch declined)
+                facts_out = (
+                    dirty_facts if (delta_mode and not compact) else combined
+                )
+                sinks.append(
+                    (
+                        "facts",
+                        lambda p=facts_path, df=facts_out: df.write.mode(
+                            "overwrite"
+                        ).parquet(p),
                     )
-                    sinks.append(
-                        (
-                            "facts",
-                            lambda p=facts_path, df=facts_out: df.write.mode(
-                                "overwrite"
-                            ).parquet(p),
-                        )
-                    )
+                )
         if catalog is not None:
             if (
                 prev_links is not None
@@ -1647,9 +1596,8 @@ def run_pipeline(
 
                 def _run_sink(name_fn):
                     name, fn = name_fn
-                    spark.sparkContext.setJobDescription(f"sink: {name}")
-                    fn()
-                    spark.sparkContext.setJobDescription(None)
+                    with _job_description(spark, f"sink: {name}"):
+                        fn()
 
                 futs = [wpool.submit(_run_sink, nf) for nf in sinks]
                 for f in futs:
@@ -1698,7 +1646,7 @@ def run_pipeline(
         "nodes_mode": nodes_mode,
         # vocabulary receipt: "delta" ⇒ surfaces/bindings/standalone sets
         # and kind totals were maintained from the delta (no corpus-union
-        # scan); "full" ⇒ recomputed; None ⇒ storeless or arrow extractor
+        # scan); "full" ⇒ recomputed; None ⇒ storeless
         "vocab_mode": vocab_mode,
         # lean ⇒ the corpus-wide fact union was never materialized this
         # run (dirty checkpoint + lazy part reads only)

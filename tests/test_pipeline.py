@@ -33,6 +33,28 @@ def test_pipeline_end_to_end(spark, transcripts, fx, tmp_path):
     assert nodes_back.count() == res.nodes.count()
 
 
+def test_job_description_cleared_when_job_raises(spark):
+    """A background thunk whose job raises must not leave its label on the
+    pooled thread: the next thunk's jobs would be counted under it."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from coco_search_spark.pipeline import _job_description
+
+    sc = spark.sparkContext
+
+    def thunk():
+        try:
+            with _job_description(spark, "sink: failing"):
+                assert sc.getLocalProperty("spark.job.description") == "sink: failing"
+                raise RuntimeError("job failed")
+        except RuntimeError:
+            pass
+        return sc.getLocalProperty("spark.job.description")
+
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        assert pool.submit(thunk).result() is None
+
+
 def test_conversation_hash_stable_under_shuffle(spark, transcripts):
     h1 = {r["conv_id"]: r["content_hash"] for r in conversation_hashes(transcripts).collect()}
     h2 = {

@@ -110,6 +110,8 @@ def test_linking_occurrence_join_is_broadcast(spark, fx):
     # at fixture scale AQE must still pick a broadcast join at runtime
     plan = _final_plan(link_mentions(mentions, catalog))
     assert "BroadcastHashJoin" in plan, plan
+    # linking is pure Catalyst: no Python UDF evaluation anywhere in the plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
 
 
 def test_resolve_edges_link_map_broadcasts_via_aqe(spark, fx):

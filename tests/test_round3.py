@@ -139,11 +139,11 @@ def test_definition_boost_flips_winner(spark):
     catalog = spark.createDataFrame(
         cat_rows, "entity_id string, alias string, block_type string"
     )
-    best = link_surfaces(mentions, catalog, embedder="expr").collect()[0]
+    best = link_surfaces(mentions, catalog).collect()[0]
     assert best["entity_id"] == "ent_b"
     # without block_type the tie-break picks ent_a (stable entity_id asc)
     catalog_plain = catalog.drop("block_type")
-    base = link_surfaces(mentions, catalog_plain, embedder="expr").collect()[0]
+    base = link_surfaces(mentions, catalog_plain).collect()[0]
     assert base["entity_id"] in ("ent_a", "ent_b")  # scores decide; boost off
     assert base["link_score"] < best["link_score"] or base["entity_id"] != "ent_b"
 

@@ -209,7 +209,7 @@ def test_weighted_definition_boost_tiers(spark):
     )
     diag = {
         r["entity_id"]: r
-        for r in link_surfaces_analyze(mentions, catalog, embedder="expr").collect()
+        for r in link_surfaces_analyze(mentions, catalog).collect()
     }
     assert diag["ent_fenced"]["boost_applied"] and diag["ent_inline"]["boost_applied"]
     assert not diag["ent_prose"]["boost_applied"]
